@@ -69,17 +69,23 @@ object CodebookExpressions {
 private[functions] trait TableExpr { self: Expression =>
   /** The reference table flattened for equality/hash purposes. */
   protected def tableRows: Array[Array[Double]]
+  /** How a nested table groups [[tableRows]] (the row count of each
+    * group), so tables that flatten alike but nest differently never
+    * compare or hash equal. Empty for flat tables. */
+  protected def tableGroups: Array[Int] = Array.emptyIntArray
   protected def tableShape: String
   final override def equals(o: Any): Boolean = o match {
     case that: TableExpr if that.getClass == getClass =>
       children == that.asInstanceOf[Expression].children &&
+        java.util.Arrays.equals(tableGroups, that.tableGroups) &&
         tableRows.length == that.tableRows.length &&
         tableRows.indices.forall(i =>
           java.util.Arrays.equals(tableRows(i), that.tableRows(i)))
     case _ => false
   }
   final override def hashCode: Int = {
-    var h = getClass.hashCode * 31 + children.hashCode
+    var h = (getClass.hashCode * 31 + children.hashCode) * 31 +
+      java.util.Arrays.hashCode(tableGroups)
     var i = 0
     while (i < tableRows.length) {
       h = h * 31 + java.util.Arrays.hashCode(tableRows(i)); i += 1
@@ -237,6 +243,7 @@ case class PqEncode(child: Expression,
   override def prettyName: String = "pq_encode"
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   @transient override protected lazy val tableRows: Array[Array[Double]] = codebooks.flatten
+  @transient override protected lazy val tableGroups: Array[Int] = codebooks.map(_.length)
   override protected def tableShape: String = {
     val k = if (codebooks.isEmpty) 0 else codebooks(0).length
     val sub = if (k == 0) 0 else codebooks(0)(0).length
@@ -290,6 +297,7 @@ case class PqAdcTable(child: Expression,
   override def prettyName: String = "pq_adc_table"
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   @transient override protected lazy val tableRows: Array[Array[Double]] = codebooks.flatten
+  @transient override protected lazy val tableGroups: Array[Int] = codebooks.map(_.length)
   override protected def tableShape: String = {
     val k = if (codebooks.isEmpty) 0 else codebooks(0).length
     val sub = if (k == 0) 0 else codebooks(0)(0).length

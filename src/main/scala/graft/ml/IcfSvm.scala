@@ -1,7 +1,8 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorOps
 
@@ -10,13 +11,16 @@ import graft.functions.VectorOps
   * model, scored with the ORIGINAL kernel (not a feature-map proxy):
   *     f(x) = Σ_{i∈SV} αᵢ yᵢ k(xᵢ, x) + b.
   *
-  * Scale: ICF and IPM are fully distributed (see [[Icf]], [[Ipm]]), and
-  * the support-vector set STAYS a DataFrame end-to-end — on
-  * non-separable data the SV set is O(n), so the driver never collects
-  * it. Scoring is a kernel-sum join: broadcast the SV side when it is
-  * small enough, otherwise a partitioned cross join; either way the
-  * per-row decision sum is one distributed aggregation keyed on the row
-  * id. The driver holds only scalars (bias, counts).
+  * Scale: ICF and IPM are fully distributed (see [[Icf]], [[Ipm]]) and
+  * share one row layout, so [[IcfSvmTrainer.fit]] reaches each row's x,
+  * y, h and α without an id join (psvm likewise keeps a row's factor
+  * with its data on the machine that holds it). The support-vector set
+  * STAYS a DataFrame end-to-end — on non-separable data the SV set is
+  * O(n), so the driver never collects it. Scoring is a kernel-sum join:
+  * broadcast the SV side when it is small enough, otherwise a
+  * partitioned cross join; either way the per-row decision sum is one
+  * distributed aggregation keyed on the row id. The driver holds only
+  * scalars (bias, counts).
   */
 final case class IcfSvmModel(
     kernel: Kernel,
@@ -70,8 +74,11 @@ final case class IcfSvmModel(
     * the fit persists `svs` (it is consumed several times during
     * training and typically many times at prediction), and nothing else
     * knows the model's lifetime — without this, cached SV blocks
-    * accumulate across models in a long-lived session. The model remains
-    * usable afterwards (the DataFrame recomputes from lineage). */
+    * accumulate across models in a long-lived session. A fitted model's
+    * cache is its only copy of the SV set: the fit releases its own
+    * passes, which were local checkpoints, so save the model
+    * ([[saveText]]) before calling this if it will be scored again. A
+    * model from [[IcfSvmModel.loadText]] rereads its files instead. */
   def unpersist(): Unit = { svs.unpersist(false); () }
 
   /** Adds `decision` and `prediction` (±1) columns over `vecCol`,
@@ -246,7 +253,41 @@ object IcfSvmModel {
   }
 }
 
+/** The psvm training pipeline in one row layout. The input rows are read
+  * once into ICF rows that carry (id, x, y) next to h; [[Icf]]'s greedy
+  * loop appends the factor's columns in place; the IPM blocks are packed
+  * from those rows partition by partition; and after [[Ipm]]'s Newton
+  * loop the support vectors are read back by zipping each ICF partition
+  * with its final block. No step re-keys rows by id, so the fit runs no
+  * DataFrame join, and it counts the input once.
+  */
 object IcfSvmTrainer {
+
+  /** The KKT bias over the free support vectors of a solved dual (this fit
+    * and [[KernelSvmTrainer.fitIpm]]): the mean of yᵢ − hᵢ·v, v = Gᵀα,
+    * over the rows whose (αᵢ, Cᵢ) `isFree` accepts (0 when there
+    * are none). One pass over the final blocks: with Gᵢ = yᵢ·hᵢ and
+    * y = ±1, hᵢ·v equals yᵢ·(Gᵢ·v) exactly. */
+  private[ml] def freeSvBias(solved: Ipm.Solved, cPos: Double, cNeg: Double,
+                             isFree: (Double, Double) => Boolean): Double = {
+    val v = solved.gTalpha
+    val (sum, cnt) = solved.blocks.treeAggregate((0.0, 0L))(
+      seqOp = { case ((s0, k0), (_, b)) =>
+        var s = s0; var k = k0; var i = 0
+        while (i < b.alpha.length) {
+          if (isFree(b.alpha(i), if (b.y(i) > 0) cPos else cNeg)) {
+            val gi = b.h(i)
+            var gv = 0.0; var j = 0
+            while (j < v.length) { gv += v(j) * gi(j); j += 1 }
+            s += b.y(i) - b.y(i) * gv; k += 1
+          }
+          i += 1
+        }
+        (s, k)
+      },
+      combOp = { case ((s1, k1), (s2, k2)) => (s1 + s2, k1 + k2) })
+    if (cnt > 0) sum / cnt else 0.0
+  }
 
   /** M6+M7+M8 end-to-end: labels must be ±1 in labelCol;
     * `posWeight`/`negWeight` scale C per class (libsvm `-wi`). */
@@ -256,75 +297,70 @@ object IcfSvmTrainer {
           svEpsilon: Double = 1e-4,
           posWeight: Double = 1.0, negWeight: Double = 1.0): IcfSvmModel = {
     val spark = df.sparkSession
+    val cPos = c * posWeight
+    val cNeg = c * negWeight
 
-    val h = Icf.factorize(df, idCol, vecCol, kernel, rank)
-    // ~50k rows per block for the IPM passes (see KernelSvmTrainer.fitIpm)
     val nRows = df.count()
-    val parts = math.max(1, math.min(df.rdd.getNumPartitions, (nRows / 50000L).toInt + 1))
-    val joined = df
-      .select(col(idCol).cast("long").as("__id"),
-              VectorOps.toDoubleArray(col(vecCol)).as("__x"),
-              col(labelCol).cast("double").as("__y"))
-      .join(h.withColumnRenamed("id", "__id"), Seq("__id"))
-      .coalesce(parts)
-      .persist()
-
-    val (alphas, _, _) = Ipm.solve(joined, "__id", "__y", "icf_features", c,
-      maxIter = maxIter, tol = tol, posWeight = posWeight, negWeight = negWeight)
-    val alphaDf = spark.createDataFrame(alphas).toDF("__id", "__alpha")
+    val rows0 = df
+      .select(col(idCol).cast("long"), VectorOps.toDoubleArray(col(vecCol)),
+              col(labelCol).cast("double"))
+      .rdd.map { r =>
+        val x = r.getSeq[Double](1).toArray
+        Icf.IcfRow(r.getLong(0), x, r.getDouble(2), new Array[Double](rank), kernel(x, x))
+      }
+    val (icf, p) = Icf.greedy[Array[Double]](
+      rows0.coalesce(Icf.blockCount(rows0.getNumPartitions, nRows)), kernel(_, _),
+      rank, 0, checkpointEvery = 16, residualTol = 0.0, checkpointDir = None)
+    val solved = Ipm.newton(
+      icf.mapPartitions(it => Ipm.pack(it.map(r =>
+        (r.id, r.y, r.h, Ipm.alpha0(r.y, cPos, cNeg))))),
+      nRows, p, cPos, cNeg, maxIter, tol)
 
     // support vectors: alpha above threshold — kept DISTRIBUTED (on
     // non-separable data this set is O(n); psvm's model.cc writes it to
     // sharded files for the same reason). The threshold scales with the
     // PER-CLASS C: with class weights, a downweighted class's alphas are
     // bounded by c*weight, and a flat eps = svEpsilon*c would silently
-    // drop that class's entire SV set.
-    val epsCol = lit(svEpsilon) *
-      when(col("__y") > 0, c * posWeight).otherwise(c * negWeight)
-    val svDf = joined.join(alphaDf, Seq("__id"))
-      .filter(col("__alpha") > epsCol)
-      .select(col("__id").as("sv_id"), col("__x").as("sv_x"),
-              (col("__y") * col("__alpha")).as("sv_coef"),
-              col("__alpha").as("sv_alpha"), col("__y").as("sv_y"))
+    // drop that class's entire SV set. Each block was packed from its
+    // ICF partition in row order, so zipping the two pairs every row
+    // with its alpha.
+    val svRows = icf.zipPartitions(solved.blocks) { (rs, bs) =>
+      bs.flatMap { case (ids, b) =>
+        rs.zipWithIndex.flatMap { case (r, i) =>
+          require(r.id == ids(i), s"ICF row ${r.id} paired with block row ${ids(i)}")
+          val a = b.alpha(i)
+          if (a > svEpsilon * (if (r.y > 0) cPos else cNeg))
+            Iterator.single(Row(r.id, r.x.toSeq, r.y * a, a, r.y))
+          else Iterator.empty
+        }
+      }
+    }
+    val svSchema = StructType(Seq(
+      StructField("sv_id", LongType), StructField("sv_x", ArrayType(DoubleType)),
+      StructField("sv_coef", DoubleType), StructField("sv_alpha", DoubleType),
+      StructField("sv_y", DoubleType)))
+    val svDf = spark.createDataFrame(svRows, svSchema)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nSv = svDf.count()
+    // fills the cache in one job: the Dataset count would add an
+    // aggregate exchange, and with it two more jobs
+    val nSv = svDf.rdd.count()
 
     // bias from free SVs' KKT, THROUGH THE ICF FACTOR — the reference's
     // own math: psvm never materializes exact kernel rows at training
     // (that is the point of ICF); its KKT algebra runs on Q ≈ GGᵀ, so
-    // b = mean over free SVs of (y_i − h_i·v) with v = Σ_j α_j y_j h_j
-    // (the m5/fitIpm shape, w = v on the factor features). Two O(n·p)
-    // passes, averaging over ALL free SVs. The first cut here summed
-    // the EXACT kernel over every (free, SV) pair instead — O(nFree·nSV)
-    // kernel evals that tools/M6Probe measured at 226.6s of m6's decade
-    // row (102.5k free × 200k SV), for a quantity whose per-SV spread
-    // under solver slack dwarfs the exact-vs-factored difference.
-    val withA = joined.join(alphaDf, Seq("__id"))
-    val p = joined.select(org.apache.spark.sql.functions.size(col("icf_features")))
-      .head().getInt(0)
-    val v = withA.select(col("__alpha"), col("__y"), col("icf_features"))
-      .rdd.treeAggregate(new Array[Double](p))(
-        seqOp = { (acc, r) =>
-          val a = r.getDouble(0) * r.getDouble(1)
-          val hi = r.getSeq[Double](2)
-          var j = 0; while (j < p) { acc(j) += a * hi(j); j += 1 }
-          acc
-        },
-        combOp = { (x, y) => var j = 0; while (j < p) { x(j) += y(j); j += 1 }; x })
-    val epsB = lit(svEpsilon) * when(col("__y") > 0, c * posWeight).otherwise(c * negWeight)
-    val cUpper = when(col("__y") > 0, c * posWeight).otherwise(c * negWeight)
-    val freeAgg = withA
-      .filter(col("__alpha") > epsB && col("__alpha") < cUpper * (1 - 1e-3))
-      .select(col("__y"), col("icf_features"))
-      .rdd.map { r =>
-        val hi = r.getSeq[Double](1)
-        var s = 0.0; var j = 0; while (j < p) { s += v(j) * hi(j); j += 1 }
-        (r.getDouble(0) - s, 1L)
-      }
-      .fold((0.0, 0L)) { (a, b) => (a._1 + b._1, a._2 + b._2) }
-    val bias = if (freeAgg._2 > 0) freeAgg._1 / freeAgg._2 else 0.0
+    // b = mean over free SVs of (y_i − h_i·v) with v = Σ_j α_j y_j h_j,
+    // the solver's final Gᵀα (the m5/fitIpm shape, w = v on the factor
+    // features): one pass over the final blocks, averaging over ALL
+    // free SVs. The first cut here summed the EXACT kernel over
+    // every (free, SV) pair instead — O(nFree·nSV) kernel evals, measured
+    // at 226.6s of m6's decade row (102.5k free × 200k SV), for a
+    // quantity whose per-SV spread under solver slack dwarfs the
+    // exact-vs-factored difference.
+    val bias = freeSvBias(solved, cPos, cNeg,
+      (a, ci) => a > svEpsilon * ci && a < ci * (1 - 1e-3))
 
-    joined.unpersist()
+    solved.blocks.unpersist(false)
+    icf.unpersist(false)
     IcfSvmModel(kernel, svDf, nSv, bias)
   }
 }

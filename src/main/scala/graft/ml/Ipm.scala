@@ -2,7 +2,7 @@ package graft.ml
 
 import breeze.linalg.{DenseMatrix, DenseVector, inv}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** §2.1 M7 (fidelity path): primal-dual Interior Point Method for the
@@ -17,18 +17,28 @@ import org.apache.spark.storage.StorageLevel
   * i.e. elementwise n-vector work + p-vector reductions + one p×p solve.
   *
   * Spark re-expression: rows live in per-partition BLOCKS (primitive
-  * arrays of y, h, α) — n-vectors never touch the driver; the driver
-  * holds only p-sized state. This is the same data layout and
+  * arrays of y, G = diag(y)·H, α) — n-vectors never touch the driver; the
+  * driver holds only p-sized state. This is the same data layout and
   * communication pattern as the reference's MPI implementation, with
   * treeAggregate playing the role of all-reduce.
   *
-  * Per-iteration work: ONE O(n·p) pass builds Gᵀα, ONE O(n·p) map
-  * materializes the per-row dot qaᵢ = (Gᵀα)·hᵢ (plus block-partial gap
-  * terms), then the SMW pass does the irreducible O(n·p²) Gram
-  * accumulation reading qa back in O(1) per row, and the Δα pass reuses
-  * qa the same way. (The first cut recomputed qa in every pass — 4×
-  * O(n·p) redundant work per iteration; grad/dInv are O(1) per row once
-  * qa is cached, so only the two genuine O(n·p) passes remain.)
+  * Per Newton step, FOUR passes, each one Spark job:
+  *   1. the gap pass materializes the per-row dot qaᵢ = Gᵢ·(Gᵀα) and
+  *      folds in the surrogate-gap and yᵀα partials;
+  *   2. the SMW pass does the irreducible O(n·p²) Gram accumulation,
+  *      reading qa back in O(1) per row;
+  *   3. the Δα pass reuses qa the same way and reduces the largest
+  *      feasible step;
+  *   4. the Gᵀα all-reduce over the updated blocks, which is also the
+  *      action that materializes them: the previous step's RDDs are
+  *      released only after it, so no separate count is needed.
+  * The last Gᵀα is returned with the blocks; for an SVM it is the primal
+  * direction v = Σ αᵢyᵢhᵢ, so callers get w with no pass of their own,
+  * and the bias in one pass over the final blocks.
+  *
+  * The loop ([[newton]]) runs on blocks its caller builds ([[pack]]), so
+  * [[IcfSvmTrainer]] and [[KernelSvmTrainer.fitIpm]] pack them in place
+  * from their own rows and read α from the final blocks, with no id join.
   *
   * `checkpointDir`: psvm-style fault tolerance — every `checkpointEvery`
   * iterations the α blocks land in parquet plus an (iter, ν) marker; a
@@ -40,11 +50,35 @@ import org.apache.spark.storage.StorageLevel
   */
 object Ipm {
 
-  /** One partition's rows, column-compressed. */
+  /** One partition's rows, column-compressed; `h` holds the rows of
+    * G = diag(y)·H. */
   final case class Block(y: Array[Double], h: Array[Array[Double]], alpha: Array[Double])
 
   final case class IpmModel(alpha: Array[Double], ids: Array[Long], bias: Double,
                             iterations: Int, surrogateGap: Double)
+
+  /** The Newton loop's result: the final blocks (persisted and
+    * materialized; the caller unpersists them), Gᵀα on them, the
+    * iteration count and the last surrogate gap. */
+  private[ml] final case class Solved(blocks: RDD[(Array[Long], Block)],
+                                      gTalpha: Array[Double], iterations: Int,
+                                      gap: Double)
+
+  /** α₀ = C_y/2: the centre of the box, strictly interior. */
+  private[ml] def alpha0(y: Double, cPos: Double, cNeg: Double): Double =
+    (if (y > 0) cPos else cNeg) / 2.0
+
+  /** Packs one partition's (id, y, h, α) rows into a block, ids alongside
+    * so α can be re-keyed; G = diag(y)·H. An empty partition packs to
+    * nothing. */
+  private[ml] def pack(rows: Iterator[(Long, Double, Array[Double], Double)])
+      : Iterator[(Array[Long], Block)] = {
+    val buf = rows.toArray
+    if (buf.isEmpty) Iterator.empty
+    else Iterator.single((
+      buf.map(_._1),
+      Block(buf.map(_._2), buf.map(t => t._3.map(v => t._2 * v)), buf.map(_._4))))
+  }
 
   /** Solve the dual on (id, y∈{±1}, h: Array[Double] rank-p rows).
     * Returns per-row alphas (collected — O(n) doubles, diagnostics/test
@@ -64,11 +98,6 @@ object Ipm {
     val rows: RDD[(Long, Double, Array[Double])] = data
       .select(col(idCol).cast("long"), col(labelCol).cast("double"), col(hCol))
       .rdd.map(r => (r.getLong(0), r.getDouble(1), r.getSeq[Double](2).toArray))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val n = rows.count()
-    val p = rows.first()._3.length
-    val sc = rows.sparkContext
 
     // ---- checkpoint restore: (iter, nu) marker + saved alphas ----
     val restored: Option[(Int, Double, RDD[(Long, Double)])] =
@@ -86,52 +115,37 @@ object Ipm {
         }
       }
 
-    // block layout: ids stay alongside so alphas can be re-keyed at the end
-    // (keep the input's partitioning: coalescing small inputs to one
-    // block was measured SLOWER — it serializes each iteration's
-    // aggregation passes, which outweighs the saved task overhead)
-    def buildBlocks(alphaOf: Option[RDD[(Long, Double)]]): RDD[(Array[Long], Block)] = {
-      val withAlpha: RDD[(Long, Double, Array[Double], Double)] = alphaOf match {
-        case None =>
-          rows.map(t => (t._1, t._2, t._3, (if (t._2 > 0) cPos else cNeg) / 2.0))
-        case Some(saved) =>
-          rows.map(t => (t._1, t)).join(saved)
-            .map { case (id, (t, a)) => (id, t._2, t._3, a) }
-      }
-      withAlpha.mapPartitions { it =>
-        val buf = it.toArray
-        if (buf.isEmpty) Iterator.empty
-        else Iterator.single((
-          buf.map(_._1),
-          Block(buf.map(_._2), buf.map(t => t._3.map(v => t._2 * v)), // G = diag(y)·H
-                buf.map(_._4))))
-      }
+    val withAlpha: RDD[(Long, Double, Array[Double], Double)] = restored match {
+      case None => rows.map(t => (t._1, t._2, t._3, alpha0(t._2, cPos, cNeg)))
+      case Some((_, _, saved)) =>
+        rows.map(t => (t._1, t)).join(saved)
+          .map { case (id, (t, a)) => (id, t._2, t._3, a) }
     }
+    val blocks = withAlpha.mapPartitions(pack).persist(StorageLevel.MEMORY_AND_DISK)
+    val (n, p) = blocks.map { case (_, b) => (b.y.length.toLong, b.h(0).length) }
+      .fold((0L, 0)) { (a, b) => (a._1 + b._1, math.max(a._2, b._2)) }
 
-    var blocks: RDD[(Array[Long], Block)] =
-      buildBlocks(restored.map(_._3)).persist(StorageLevel.MEMORY_AND_DISK)
-    blocks.count()
-    rows.unpersist(false)
+    val solved = newton(blocks, n, p, cPos, cNeg, maxIter, tol,
+      restored.map(_._1).getOrElse(0), restored.map(_._2).getOrElse(0.0),
+      checkpointDir.map(d => (d, checkpointEvery)))
+    val alphas = solved.blocks.flatMap { case (ids, b) => ids.zip(b.alpha) }
+    (alphas, solved.iterations, solved.gap)
+  }
 
-    var nu = restored.map(_._2).getOrElse(0.0)
-    var iter = restored.map(_._1).getOrElse(0)
-    var gap = Double.MaxValue
-    val mu = 10.0
+  /** The Newton loop on caller-built blocks of n rows and rank p, from
+    * iteration `iter0` with multiplier `nu0`. Persists `start`, releases
+    * every RDD it makes but the final blocks, and checkpoints α every
+    * `checkpoint._2` iterations into `checkpoint._1` when given. */
+  private[ml] def newton(start: RDD[(Array[Long], Block)], n: Long, p: Int,
+                         cPos: Double, cNeg: Double, maxIter: Int, tol: Double,
+                         iter0: Int = 0, nu0: Double = 0.0,
+                         checkpoint: Option[(String, Int)] = None): Solved = {
+    val sc = start.sparkContext
 
-    def writeCheckpoint(): Unit = checkpointDir.foreach { dir =>
-      import spark.implicits._
-      val flat = blocks.flatMap { case (ids, b) => ids.zip(b.alpha) }
-      spark.createDataFrame(flat).toDF("id", "alpha")
-        .write.mode("overwrite").parquet(s"$dir/alphas")
-      // marker LAST: a state file only ever points at a fully-written dump
-      val w = new java.io.PrintWriter(s"$dir/state")
-      try w.print(s"$iter $nu") finally w.close()
-    }
-
-    while (iter < maxIter && gap > tol) {
-      // Gᵀα: the only pass that needs every (row × p) product before the
-      // per-row dot qaᵢ = Σⱼ hᵢⱼ(Gᵀα)ⱼ is defined
-      val gTalpha = blocks.treeAggregate(new Array[Double](p))(
+    // Gᵀα: the only pass that needs every (row × p) product before the
+    // per-row dot qaᵢ = Σⱼ Gᵢⱼ(Gᵀα)ⱼ is defined
+    def allReduceGtAlpha(bs: RDD[(Array[Long], Block)]): Array[Double] =
+      bs.treeAggregate(new Array[Double](p))(
         seqOp = { case (acc, (_, b)) =>
           var i = 0
           while (i < b.alpha.length) {
@@ -142,6 +156,26 @@ object Ipm {
           acc
         },
         combOp = { (a1, a2) => var j = 0; while (j < p) { a1(j) += a2(j); j += 1 }; a1 })
+
+    var blocks = start.persist(StorageLevel.MEMORY_AND_DISK)
+    var gTalpha = allReduceGtAlpha(blocks)
+    var nu = nu0
+    var iter = iter0
+    var gap = Double.MaxValue
+    val mu = 10.0
+
+    def writeCheckpoint(dir: String): Unit = {
+      val spark = SparkSession.active
+      import spark.implicits._
+      val flat = blocks.flatMap { case (ids, b) => ids.zip(b.alpha) }
+      spark.createDataFrame(flat).toDF("id", "alpha")
+        .write.mode("overwrite").parquet(s"$dir/alphas")
+      // marker LAST: a state file only ever points at a fully-written dump
+      val w = new java.io.PrintWriter(s"$dir/state")
+      try w.print(s"$iter $nu") finally w.close()
+    }
+
+    while (iter < maxIter && gap > tol) {
       val gTalphaB = sc.broadcast(gTalpha)
 
       // materialize qa once per iteration (reused by the SMW and Δα
@@ -263,20 +297,21 @@ object Ipm {
           (ids, Block(b.y, b.h, na))
         }.persist(StorageLevel.MEMORY_AND_DISK)
         // localCheckpoint: truncates both the lineage and the closure
-        // chain (which captures this iteration's broadcasts)
+        // chain (which captures this iteration's broadcasts). The next
+        // Gᵀα is the action that materializes the new blocks; only then
+        // can this step's RDDs go.
         blocks.localCheckpoint()
-        blocks.count()
+        gTalpha = allReduceGtAlpha(blocks)
         updated.unpersist(false)
         withQa.unpersist(false)
         prev.unpersist(false)
         nu += step * deltaNu
         iter += 1
-        if (checkpointDir.isDefined && iter % checkpointEvery == 0 && iter < maxIter)
-          writeCheckpoint()
+        checkpoint.foreach { case (dir, every) =>
+          if (iter % every == 0 && iter < maxIter) writeCheckpoint(dir)
+        }
       }
     }
-
-    val alphas = blocks.flatMap { case (ids, b) => ids.zip(b.alpha) }
-    (alphas, iter, gap)
+    Solved(blocks, gTalpha, iter, gap)
   }
 }

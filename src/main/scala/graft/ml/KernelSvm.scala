@@ -239,52 +239,37 @@ object KernelSvmTrainer {
   }
 
   /** M7 fidelity path: fit via the exact SMW interior-point dual solve
-    * (reference: psvm ipm.cc) instead of the OWLQN primal. Recovers the
-    * primal weights w = Σ αᵢyᵢφ(xᵢ) distributedly and the bias from the
-    * free support vectors' KKT conditions. */
+    * (reference: psvm ipm.cc) instead of the OWLQN primal. The primal
+    * weights w = Σ αᵢyᵢφ(xᵢ) are the solver's final Gᵀα, and the bias
+    * comes from the free support vectors' KKT conditions in one pass over
+    * the solver's blocks, so α never leaves them. */
   def fitIpm(df: DataFrame, idCol: String, vecCol: String, labelCol: String,
              params: KernelSvmParams = KernelSvmParams(),
              c: Double = 1.0, maxIter: Int = 60): KernelSvmModel = {
     val map = Nystrom.fit(df, idCol, vecCol, params.kernel, params.numLandmarks)
-    // compact the block layout like [[fit]] does: the IPM loop runs ~3
-    // distributed passes per iteration, and per-task overhead dominates
-    // when blocks are thin — keep ~50k rows per block (wide data keeps
-    // its parallelism, toy data stops paying 32 empty tasks per pass)
-    val nIpm = df.count()
-    val partsIpm = math.max(1, math.min(df.rdd.getNumPartitions, (nIpm / 50000L).toInt + 1))
+    val cPos = c * params.posWeight
+    val cNeg = c * params.negWeight
+    // the IPM blocks are packed straight from the features, ~50k rows
+    // per block: the IPM loop runs four distributed passes per
+    // iteration, and per-task overhead dominates when blocks are thin
+    val n = df.count()
     val feats = Nystrom.transform(df, vecCol, map, "__phi")
-      .coalesce(partsIpm).persist()
-    val (alphas, _, _) = Ipm.solve(feats, idCol, labelCol, "__phi", c,
-      maxIter = maxIter, tol = params.tol,
-      posWeight = params.posWeight, negWeight = params.negWeight)
-    val withAlpha = feats
-      .join(feats.sparkSession.createDataFrame(alphas)
-        .toDF(idCol + "_a", "__alpha"), col(idCol) === col(idCol + "_a"))
-    val p = map.rank
-    // w = Σ alpha_i y_i phi_i — one distributed pass
-    val w = withAlpha.select(col("__alpha"), col(labelCol).cast("double"), col("__phi"))
-      .rdd.treeAggregate(new Array[Double](p))(
-        seqOp = { (acc, r) =>
-          val a = r.getDouble(0) * r.getDouble(1)
-          val phi = r.getSeq[Double](2)
-          var j = 0; while (j < p) { acc(j) += a * phi(j); j += 1 }
-          acc
-        },
-        combOp = { (x, y) => var j = 0; while (j < p) { x(j) += y(j); j += 1 }; x })
-    // bias from free SVs: b = mean(y_i − w·phi_i); the upper bound is the
-    // per-class C when class weights are set
+      .select(col(idCol).cast("long"), col(labelCol).cast("double"), col("__phi"))
+      .rdd
+    val solved = Ipm.newton(
+      feats.coalesce(Icf.blockCount(feats.getNumPartitions, n)).mapPartitions(it =>
+        Ipm.pack(it.map { r =>
+          val y = r.getDouble(1)
+          (r.getLong(0), y, r.getSeq[Double](2).toArray, Ipm.alpha0(y, cPos, cNeg))
+        })),
+      n, map.rank, cPos, cNeg, maxIter, params.tol)
+    // w = Σ αᵢyᵢφᵢ is the solver's final Gᵀα (G = diag(y)·Φ); the bias
+    // comes from the free SVs, b = mean(yᵢ − w·φᵢ), whose upper bound is
+    // the per-class C when class weights are set
     val eps = 1e-3 * c
-    val cCol = when(col(labelCol) > 0, c * params.posWeight)
-      .otherwise(c * params.negWeight)
-    val free = withAlpha.filter(col("__alpha") > eps && col("__alpha") < cCol - eps)
-      .select(col(labelCol).cast("double"), col("__phi"))
-      .rdd.map { r =>
-        val phi = r.getSeq[Double](1)
-        var s = 0.0; var j = 0; while (j < p) { s += w(j) * phi(j); j += 1 }
-        (r.getDouble(0) - s, 1L)
-      }.reduce { (a, b) => (a._1 + b._1, a._2 + b._2) }
-    feats.unpersist()
-    KernelSvmModel(map, w, if (free._2 > 0) free._1 / free._2 else 0.0)
+    val bias = IcfSvmTrainer.freeSvBias(solved, cPos, cNeg, (a, ci) => a > eps && a < ci - eps)
+    solved.blocks.unpersist(false)
+    KernelSvmModel(map, solved.gTalpha, bias)
   }
 
   /** M12 (model form): one-vs-rest multiclass with ONE shared Nyström

@@ -134,7 +134,7 @@ class CodebookExpressionsSpec extends AnyFunSuite {
   }
 
   test("table expressions: content-based equality/hash + stable rendering (r14 advice)") {
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val childRef = BoundReference(0, ArrayType(DoubleType), nullable = true)
     def mk() = CentroidSqDistances(childRef,
@@ -146,6 +146,16 @@ class CodebookExpressionsSpec extends AnyFunSuite {
     assert(!mk().toString.contains("@"), s"identity hash leaked: ${mk().toString}")
     val other = CentroidSqDistances(childRef, Array.tabulate(3)(c => v(c + 9, 4)))
     assert(mk() != other, "different tables must not compare equal")
+    // codebooks [[a, b]] and [[a], [b]] flatten to the same rows
+    val (a, b) = (v(1, 4), v(2, 4))
+    val oneGroup = Array(Array(a, b))
+    val twoGroups = Array(Array(a), Array(b))
+    for (mkPq <- Seq[Array[Array[Array[Double]]] => Expression](
+        PqEncode(childRef, _), PqAdcTable(childRef, _))) {
+      assert(mkPq(oneGroup) == mkPq(Array(Array(a.clone, b.clone))))
+      assert(mkPq(oneGroup) != mkPq(twoGroups), "codebook nesting must count")
+      assert(mkPq(oneGroup).hashCode != mkPq(twoGroups).hashCode)
+    }
   }
 
   test("hardening: short vectors fail loudly, long residual vectors clamp") {

@@ -257,4 +257,69 @@ class IcfSvmSpec extends SparkSpec {
       s"factored-KKT bias must track the exact-kernel mean: ${m.bias} vs $bExact")
     m.unpersist()
   }
+
+  private def blobs(seed: Int, n: Int, spread: Double): Seq[(Long, Array[Double], Double)] = {
+    val rng = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      val pos = i % 2 == 0
+      val cx = if (pos) 2.0 else -2.0
+      (i.toLong,
+       Array(cx + rng.nextGaussian() * spread, -cx + rng.nextGaussian() * spread),
+       if (pos) 1.0 else -1.0)
+    }
+  }
+
+  test("Icf.factorize runs one Spark job per column") {
+    val df = blobs(23, 80, 0.4).toDF("id", "vec", "y")
+    def jobs(rank: Int): Int = JobCount.of(spark) {
+      assert(Icf.factorize(df, "id", "vec", Kernel.Rbf(0.5), rank).count() === 80)
+    }
+    val (j8, j16) = (jobs(8), jobs(16))
+    info(s"jobs: rank 8 -> $j8, rank 16 -> $j16")
+    assert(j16 - j8 === 8, "8 more columns must cost one job each")
+  }
+
+  test("fit equals factorize -> id join -> solve -> SV filter -> factored-KKT bias") {
+    import org.apache.spark.sql.functions.col
+    val df = blobs(23, 80, 0.4).toDF("id", "vec", "y")
+    val (kernel, rank, c, maxIter, tol, svEps) = (Kernel.Rbf(0.5), 20, 1.0, 60, 1e-5, 1e-4)
+    val model = IcfSvmTrainer.fit(df, "id", "vec", "y", kernel, rank, c = c,
+      maxIter = maxIter, tol = tol, svEpsilon = svEps)
+    val fitted = model.svs.select("sv_id", "sv_coef").as[(Long, Double)].collect().toMap
+    model.unpersist()
+
+    // the reference: the public steps, joined by id
+    val joined = df.join(Icf.factorize(df, "id", "vec", kernel, rank), "id")
+      .select(col("id"), col("y"), col("icf_features"))
+    val (alphaRdd, _, _) = Ipm.solve(joined, "id", "y", "icf_features", c,
+      maxIter = maxIter, tol = tol)
+    val alpha = alphaRdd.collect().toMap
+    val rows = joined.as[(Long, Double, Seq[Double])].collect()
+    val v = new Array[Double](rank)
+    rows.foreach { case (id, y, h) => h.indices.foreach(j => v(j) += alpha(id) * y * h(j)) }
+    val free = rows.filter { case (id, _, _) => alpha(id) > svEps * c && alpha(id) < c * (1 - 1e-3) }
+    assert(free.nonEmpty)
+    val bias = free.map { case (_, y, h) => y - h.indices.map(j => v(j) * h(j)).sum }.sum / free.length
+    val refSvs = rows.collect { case (id, y, _) if alpha(id) > svEps * c => id -> y * alpha(id) }.toMap
+
+    def near(a: Double, b: Double): Boolean = math.abs(a - b) <= 1e-6 * math.max(1.0, math.abs(b))
+    assert(fitted.keySet === refSvs.keySet, "same support vectors")
+    fitted.foreach { case (id, coef) =>
+      assert(near(coef, refSvs(id)), s"sv_coef of $id: $coef vs ${refSvs(id)}")
+    }
+    assert(near(model.bias, bias), s"bias ${model.bias} vs $bias")
+  }
+
+  test("fit caches nothing but the model's svs, and unpersist releases them") {
+    val df = blobs(5, 60, 0.6).toDF("id", "vec", "y")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val model = IcfSvmTrainer.fit(df, "id", "vec", "y", Kernel.Rbf(0.5), rank = 16,
+      maxIter = 20)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size === 1, s"fit left cached RDDs $added")
+    assert(model.svs.storageLevel.useMemory, "svs is the one cache the fit keeps")
+    model.unpersist()
+    assert(sc.getPersistentRDDs.keySet === before)
+  }
 }

@@ -51,4 +51,29 @@ class IpmSpec extends SparkSpec {
     val acc = pts.count { case (id, _, y) => (score(id) + b) * y > 0 }.toDouble / pts.size
     assert(acc === 1.0, s"separable blobs must classify perfectly, got $acc")
   }
+
+  test("Ipm.solve runs four Spark jobs per Newton step") {
+    val rng = new scala.util.Random(29)
+    val pts = (0 until 60).map { i =>
+      val pos = i % 2 == 0
+      val cx = if (pos) 1.0 else -1.0
+      (i.toLong, Array(cx + rng.nextGaussian(), cx + rng.nextGaussian()),
+       if (pos) 1.0 else -1.0)
+    }
+    val df = pts.toDF("id", "vec", "y")
+    val map = Nystrom.fit(df, "id", "vec", Kernel.Rbf(0.5), numLandmarks = 12)
+    val feats = Nystrom.transform(df, "vec", map, "h").persist()
+    feats.count()
+    // tol 0: no iteration converges, so every one is a full Newton step
+    def jobs(maxIter: Int): Int = JobCount.of(spark) {
+      val (alphas, iters, _) = Ipm.solve(feats, "id", "y", "h", 1.0,
+        maxIter = maxIter, tol = 0.0)
+      assert(iters === maxIter)
+      alphas.count()
+    }
+    val (j3, j6) = (jobs(3), jobs(6))
+    feats.unpersist()
+    info(s"jobs: maxIter 3 -> $j3, maxIter 6 -> $j6")
+    assert(j6 - j3 === 12, "3 more Newton steps must cost 4 jobs each")
+  }
 }
