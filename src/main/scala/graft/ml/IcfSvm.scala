@@ -1,10 +1,12 @@
 package graft.ml
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
-import graft.functions.VectorOps
+import graft.functions.{SvBlock, SvmExpressions, VectorOps}
 
 /** The complete reference pipeline (psvm svm_train.cc): greedy-pivot ICF
   * of the kernel matrix → SMW interior-point dual solve → support-vector
@@ -15,12 +17,12 @@ import graft.functions.VectorOps
   * share one row layout, so [[IcfSvmTrainer.fit]] reaches each row's x,
   * y, h and α without an id join (psvm likewise keeps a row's factor
   * with its data on the machine that holds it). The support-vector set
-  * STAYS a DataFrame end-to-end — on non-separable data the SV set is
-  * O(n), so the driver never collects it. Scoring is a kernel-sum join:
-  * broadcast the SV side when it is small enough, otherwise a
-  * partitioned cross join; either way the per-row decision sum is one
-  * distributed aggregation keyed on the row id. The driver holds only
-  * scalars (bias, counts).
+  * is a DataFrame: on non-separable data it is O(n), so neither the fit
+  * nor [[saveText]] collects it. Scoring follows psvm's `svm_predict`:
+  * up to `broadcastThreshold` SVs, [[predict]] collects the SV block
+  * once, broadcasts it, and scores each row on its own in one map-side
+  * pass; above it, the SVs stay distributed and the decision is a
+  * partitioned kernel-sum join.
   */
 final case class IcfSvmModel(
     kernel: Kernel,
@@ -49,7 +51,14 @@ final case class IcfSvmModel(
     // the equivalent). -1 for a degenerate zero-SV model.
     val dim = svs.select(org.apache.spark.sql.functions.size(col("sv_x")))
       .head(1).headOption.map(_.getInt(0)).getOrElse(-1)
-    Seq(
+    // the 9-line header is written directly through the path's own
+    // FileSystem, as the text writer would lay it out (part-00000 plus
+    // _SUCCESS, the directory replaced) but without a Spark job
+    val header = new Path(s"$path/header")
+    val fs = header.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(header, true)
+    val out = fs.create(new Path(header, "part-00000"))
+    try out.write(Seq(
       "svm_type c_svc",
       s"kernel_type $kt",
       s"gamma ${g.toString}",
@@ -59,7 +68,9 @@ final case class IcfSvmModel(
       s"dim $dim",
       s"rho ${(-bias).toString}",
       "SV"
-    ).toDS().coalesce(1).write.mode("overwrite").text(s"$path/header")
+    ).mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    fs.create(new Path(header, "_SUCCESS")).close()
     svs.select(col("sv_coef"), col("sv_x")).as[(Double, Seq[Double])]
       .map { case (coef, x) =>
         val sb = new StringBuilder(coef.toString)
@@ -78,35 +89,66 @@ final case class IcfSvmModel(
     * cache is its only copy of the SV set: the fit releases its own
     * passes, which were local checkpoints, so save the model
     * ([[saveText]]) before calling this if it will be scored again. A
-    * model from [[IcfSvmModel.loadText]] rereads its files instead. */
-  def unpersist(): Unit = { svs.unpersist(false); () }
-
-  /** Adds `decision` and `prediction` (±1) columns over `vecCol`,
-    * keyed by the (unique) `idCol`.
-    *
-    * Cost model at scale: kernel-SVM scoring is inherently O(n·nSV)
-    * (psvm pays the same). The broadcast path covers SV sets up to
-    * `broadcastThreshold`; beyond that the partitioned cross join is
-    * correct but quadratic-ish — for 100 TB corpora score with the
-    * Nyström model instead (O(n·p) via [[KernelSvmModel.predict]]), or
-    * chunk the SV side (score in ≤threshold-sized SV batches and sum
-    * the partial kernel sums) when exact-kernel decisions are required. */
-  def predict(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val svSide0 = svs.select(col("sv_x"), col("sv_coef"))
-    val svSide = if (numSupportVectors <= broadcastThreshold) broadcast(svSide0) else svSide0
-    val scores = df
-      .select(col(idCol).as("__pid"), VectorOps.toDoubleArray(col(vecCol)).as("__px"))
-      .crossJoin(svSide)
-      .groupBy(col("__pid"))
-      .agg(sum(col("sv_coef") * kernel(col("sv_x"), col("__px"))).as("__ksum"))
-    // LEFT join + coalesce: a degenerate model with zero support vectors
-    // (e.g. single-class data) must still score every row (bias only),
-    // not drop them all through an inner join against an empty side
-    df.join(scores, df(idCol) === scores("__pid"), "left")
-      .withColumn("decision", coalesce(col("__ksum"), lit(0.0)) + lit(bias))
-      .drop("__pid", "__ksum")
-      .withColumn("prediction", when(col("decision") >= 0, 1.0).otherwise(-1.0))
+    * model from [[IcfSvmModel.loadText]] rereads its files instead.
+    * The broadcast SV block that [[predict]] scores against, if one was
+    * made, is unpersisted from the executors and dropped; it is not
+    * destroyed, so a frame [[predict]] already returned still runs. */
+  def unpersist(): Unit = synchronized {
+    svs.unpersist(false)
+    heldSvBlock.foreach(_.unpersist(false))
+    heldSvBlock = None
   }
+
+  /** Adds `decision` and `prediction` (±1) columns over `vecCol`.
+    *
+    * Up to `broadcastThreshold` support vectors, each row is scored on
+    * its own, map-side: the SV block is collected once per model and
+    * broadcast, and one [[graft.functions.SvmDecision]] expression folds
+    * coefᵢ·k(svᵢ, x) over it in SV order, then adds the bias — no join,
+    * no aggregate, no shuffle of (row, SV) pairs. `idCol` is not read on
+    * this path, so rows need not have unique ids, and `df` keeps its
+    * partitioning and row order. A null vector scores the bias, as it
+    * does above the threshold.
+    *
+    * Above the threshold the SV side stays distributed: a partitioned
+    * cross join, the per-row kernel sums aggregated by the (unique)
+    * `idCol` and joined back. That is correct but quadratic-ish — for
+    * 100 TB corpora score with the Nyström model instead (O(n·p) via
+    * [[KernelSvmModel.predict]]), or use [[predictChunked]] when
+    * exact-kernel decisions are required. */
+  def predict(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val scored = if (numSupportVectors <= broadcastThreshold) {
+      df.withColumn("decision", SvmExpressions.svmDecision(
+        VectorOps.toDoubleArray(col(vecCol)), kernel, bias, svBlock))
+    } else {
+      val scores = df
+        .select(col(idCol).as("__pid"), VectorOps.toDoubleArray(col(vecCol)).as("__px"))
+        .crossJoin(svs.select(col("sv_x"), col("sv_coef")))
+        .groupBy(col("__pid"))
+        .agg(sum(col("sv_coef") * kernel(col("sv_x"), col("__px"))).as("__ksum"))
+      // LEFT join + coalesce: a degenerate model with zero support vectors
+      // (e.g. single-class data) must still score every row (bias only),
+      // not drop them all through an inner join against an empty side
+      df.join(scores, df(idCol) === scores("__pid"), "left")
+        .withColumn("decision", coalesce(col("__ksum"), lit(0.0)) + lit(bias))
+        .drop("__pid", "__ksum")
+    }
+    scored.withColumn("prediction", when(col("decision") >= 0, 1.0).otherwise(-1.0))
+  }
+
+  /** The SV block [[predict]] scores against: collected and broadcast on
+    * first use, then held until [[unpersist]]. */
+  private def svBlock: Broadcast[SvBlock] = synchronized {
+    heldSvBlock.getOrElse {
+      val rows = svs.select(col("sv_x"), col("sv_coef")).collect()
+      val b = svs.sparkSession.sparkContext.broadcast(
+        new SvBlock(rows.map(_.getSeq[Double](0).toArray), rows.map(_.getDouble(1))))
+      heldSvBlock = Some(b)
+      b
+    }
+  }
+
+  private[ml] var heldSvBlock: Option[Broadcast[SvBlock]] = None
 
   /** [[predict]] in bounded SV batches — the path for the regime where
     * BOTH the corpus and the SV set are huge (non-separable data makes

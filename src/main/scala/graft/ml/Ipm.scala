@@ -54,9 +54,6 @@ object Ipm {
     * G = diag(y)·H. */
   final case class Block(y: Array[Double], h: Array[Array[Double]], alpha: Array[Double])
 
-  final case class IpmModel(alpha: Array[Double], ids: Array[Long], bias: Double,
-                            iterations: Int, surrogateGap: Double)
-
   /** The Newton loop's result: the final blocks (persisted and
     * materialized; the caller unpersists them), Gᵀα on them, the
     * iteration count and the last surrogate gap. */

@@ -67,9 +67,9 @@ object ScaleOps {
     if (!java.nio.file.Files.exists(root)) 0L
     else {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala
+      scala.util.Using.resource(java.nio.file.Files.walk(root))(_.iterator().asScala
         .filter(java.nio.file.Files.isRegularFile(_))
-        .map(java.nio.file.Files.size).sum
+        .map(java.nio.file.Files.size).sum)
     }
   }
 

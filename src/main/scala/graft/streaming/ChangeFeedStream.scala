@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -58,7 +59,8 @@ object ChangeFeedStream {
     // materialized EAGERLY (batch-sized): both the aggregate-delta write
     // and the state write below consume `joined` — unpersisted, the
     // batch's LWW window + state join ran TWICE per micro-batch
-    // (measured via QueryProfile: the two writes dominate the batch)
+    // (measured via QueryProfile: the two writes dominate the batch).
+    // Its blocks are released once both writes are done.
     val joined = net.join(
       state.select(col("k"), col("price").as("pre_price"),
         col("status").as("pre_status"), col("deleted").as("pre_deleted"),
@@ -94,8 +96,11 @@ object ChangeFeedStream {
     // _SUCCESS-marked state dirs, so agg_N exists whenever state_N is
     // visible; a crash between the writes replays the batch, which the
     // stale guard above makes a no-op re-merge (s5's idempotency)
-    newAgg.write.mode("overwrite").parquet(s"$root/agg_${v + 1}")
-    newState.write.mode("overwrite").parquet(s"$root/state_${v + 1}")
+    try {
+      newAgg.write.mode("overwrite").parquet(s"$root/agg_${v + 1}")
+      newState.write.mode("overwrite").parquet(s"$root/state_${v + 1}")
+    } finally joined.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(false))
   }
 
   /** s13: write U11's three commits, stream them one file per trigger,

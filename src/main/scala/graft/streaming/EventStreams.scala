@@ -118,9 +118,8 @@ object EventStreams {
     // RocksDB snapshot upload per store per batch — strictly less commit
     // I/O at every scale (snapshots still happen, asynchronously in the
     // maintenance thread). Env-overridable for A/B.
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true"))
+    val prevChangelog = spark.conf.getOption(ChangelogConf)
+    spark.conf.set(ChangelogConf, sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true"))
     try {
       val t0 = System.nanoTime()
       val q = out.writeStream.format("memory").queryName(name)
@@ -133,11 +132,14 @@ object EventStreams {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       if (prevProvider.isEmpty) spark.conf.unset(ProviderConf)
       else spark.conf.set(ProviderConf, prevProvider)
+      prevChangelog.fold(spark.conf.unset(ChangelogConf))(spark.conf.set(ChangelogConf, _))
     }
     spark.table(name)
   }
 
   private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
+  private val ChangelogConf =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
   /** The keyed state-layout width [[runToMemory]] uses, for the
     * self-managed foreachBatch streams (s11/s13) that don't go through

@@ -22,8 +22,9 @@ object PlanAudit {
           // are visible (the formatted initial plan expands duplicate
           // subtrees that AQE deduplicates at runtime)
           if (sys.env.get("SPARK_GRAFT_PLAN_EXEC").contains("true")) {
-            df.write.format("noop").mode("overwrite").save()
-            println(df.queryExecution.executedPlan.toString)
+            val qe = df.queryExecution
+            qe.toRdd.foreach(_ => ())
+            println(qe.executedPlan.toString)
           } else println(df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))
         } catch { case e: Throwable => println(s"explain failed: $e") }

@@ -322,4 +322,138 @@ class IcfSvmSpec extends SparkSpec {
     model.unpersist()
     assert(sc.getPersistentRDDs.keySet === before)
   }
+
+  /** A hand-built model over `svs` (x, coef) rows, in that SV order. */
+  private def svModel(kernel: Kernel, svs: Seq[(Array[Double], Double)], bias: Double,
+                      threshold: Long = 65536): IcfSvmModel =
+    IcfSvmModel(kernel, svs.map { case (x, c) => (x.toSeq, c) }.toDF("sv_x", "sv_coef"),
+      svs.size.toLong, bias, threshold)
+
+  /** The decision replayed in plain Scala: the fold from 0.0 of coef·k in
+    * SV order, then + bias, with the Column forms' loops and StrictMath. */
+  private def replay(kernel: Kernel, svs: Seq[(Array[Double], Double)], bias: Double,
+                     x: Array[Double]): Double = {
+    def loop(a: Array[Double], f: (Double, Double) => Double): Double = {
+      var s = 0.0; var i = 0
+      while (i < math.min(a.length, x.length)) { s += f(a(i), x(i)); i += 1 }
+      s
+    }
+    val k: Array[Double] => Double = kernel match {
+      case Kernel.Linear => a => loop(a, _ * _)
+      case Kernel.Polynomial(g, c0, d) => a => StrictMath.pow(g * loop(a, _ * _) + c0, d.toDouble)
+      case Kernel.Rbf(g) => a => StrictMath.exp(-g * loop(a, (u, v) => (u - v) * (u - v)))
+      case Kernel.Laplacian(g) => a => StrictMath.exp(-g * loop(a, (u, v) => math.abs(u - v)))
+    }
+    svs.foldLeft(0.0) { case (acc, (sv, c)) => acc + c * k(sv) } + bias
+  }
+
+  private def randomSvs(seed: Int, n: Int, dim: Int): Seq[(Array[Double], Double)] = {
+    val rng = new scala.util.Random(seed)
+    Seq.fill(n)((Array.fill(dim)(rng.nextGaussian()), rng.nextGaussian()))
+  }
+
+  test("predict's decisions equal the plain-Scala replay bit for bit, for all four kernels") {
+    val svs = randomSvs(3, 37, 5)
+    val rng = new scala.util.Random(4)
+    val rows = (0 until 50).map(i => (i.toLong, Array.fill(5)(rng.nextGaussian())))
+    val df = rows.toDF("id", "vec")
+    for (kernel <- Seq(Kernel.Linear, Kernel.Polynomial(0.3, 1.5, 3), Kernel.Rbf(0.4),
+                       Kernel.Laplacian(0.7))) {
+      val got = svModel(kernel, svs, -0.37).predict(df, "id", "vec")
+        .select("id", "decision").as[(Long, Double)].collect().toMap
+      rows.foreach { case (id, x) =>
+        val want = replay(kernel, svs, -0.37, x)
+        assert(java.lang.Double.doubleToRawLongBits(got(id)) ===
+          java.lang.Double.doubleToRawLongBits(want), s"${kernel.name} row $id: ${got(id)} vs $want")
+      }
+    }
+  }
+
+  test("predict below the threshold scores map-side: no join, no aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
+    val df = blobs(23, 40, 0.4).toDF("id", "vec", "y")
+    val scored = svModel(Kernel.Rbf(0.5), randomSvs(5, 12, 2), 0.1).predict(df, "id", "vec")
+    assert(scored.collect().length === 40)
+    val logical = scored.queryExecution.optimizedPlan
+    assert(logical.collect { case p @ (_: Join | _: Aggregate) => p }.isEmpty, logical.toString)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val physical = helper.collect(scored.queryExecution.executedPlan) {
+      case p @ (_: BaseJoinExec | _: BroadcastNestedLoopJoinExec | _: BaseAggregateExec) => p
+    }
+    assert(physical.isEmpty, scored.queryExecution.executedPlan.toString)
+  }
+
+  test("a zero-SV model scores every row with decision == bias") {
+    val df = blobs(7, 30, 0.5).toDF("id", "vec", "y")
+    val scored = svModel(Kernel.Rbf(0.5), Seq.empty, 0.25).predict(df, "id", "vec")
+      .select("id", "decision", "prediction").as[(Long, Double, Double)].collect()
+    assert(scored.map(_._1).sorted.toSeq === (0L until 30L))
+    assert(scored.forall(r => r._2 == 0.25 && r._3 == 1.0))
+  }
+
+  test("rows sharing an id are each scored against their own x") {
+    val svs = randomSvs(9, 8, 2)
+    val (a, b) = (Array(0.5, -1.0), Array(-2.0, 3.0))
+    val df = Seq((1L, a.toSeq), (1L, b.toSeq)).toDF("id", "vec")
+    val got = svModel(Kernel.Rbf(0.5), svs, 0.0).predict(df, "id", "vec")
+      .select("vec", "decision").as[(Seq[Double], Double)].collect()
+    assert(got.length === 2)
+    got.foreach { case (x, d) =>
+      assert(d == replay(Kernel.Rbf(0.5), svs, 0.0, x.toArray), s"row $x scored $d")
+    }
+  }
+
+  test("above the threshold, the partitioned kernel-sum join agrees with the map-side path") {
+    val df = blobs(11, 60, 0.8).toDF("id", "vec", "y")
+    val model = svModel(Kernel.Rbf(0.5), randomSvs(12, 20, 2), -0.2)
+    def decisions(m: IcfSvmModel) = m.predict(df, "id", "vec")
+      .select("id", "decision").as[(Long, Double)].collect().toMap
+    val (mapSide, joined) = (decisions(model), decisions(model.copy(broadcastThreshold = 4)))
+    assert(mapSide.keySet === joined.keySet && mapSide.size === 60)
+    mapSide.foreach { case (id, d) =>
+      assert(math.abs(d - joined(id)) < 1e-9, s"id $id: $d vs ${joined(id)}")
+    }
+  }
+
+  test("predict leaves no cached RDD behind once the model is unpersisted") {
+    val df = blobs(13, 60, 0.6).toDF("id", "vec", "y")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val model = IcfSvmTrainer.fit(df, "id", "vec", "y", Kernel.Rbf(0.5), rank = 16,
+      maxIter = 20)
+    val scored = model.predict(df, "id", "vec")
+    assert(scored.collect().length === 60)
+    assert(model.heldSvBlock.isDefined, "the map-side path broadcasts the SV block")
+    model.unpersist()
+    assert(sc.getPersistentRDDs.keySet === before)
+    assert(model.heldSvBlock.isEmpty, "unpersist must release the broadcast SV block")
+    // released, not destroyed: a frame predict already returned still runs
+    assert(scored.collect().length === 60)
+  }
+
+  test("a null feature vector scores the bias in both regimes") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    val df = Seq((0L, Option(Seq(0.5, -1.0))), (1L, Option.empty[Seq[Double]]),
+                 (2L, Option(Seq(-2.0, 3.0)))).toDF("id", "vec")
+    val model = svModel(Kernel.Rbf(0.5), randomSvs(14, 12, 2), -0.3)
+    def scored(m: IcfSvmModel) = m.predict(df, "id", "vec")
+      .select("id", "decision", "prediction").as[(Long, Double, Double)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    val (mapSide, joined) = (scored(model), scored(model.copy(broadcastThreshold = 4)))
+    assert(mapSide(1L) === ((-0.3, -1.0)))
+    assert(joined(1L) === ((-0.3, -1.0)))
+    assert(mapSide.keySet === joined.keySet && mapSide.size === 3)
+    mapSide.foreach { case (id, (d, p)) =>
+      assert(math.abs(d - joined(id)._1) < 1e-9 && p === joined(id)._2, s"id $id")
+    }
+    // the interpreted path agrees with the generated one
+    val expr = graft.functions.SvmDecision(BoundReference(0, ArrayType(DoubleType), true),
+      model.kernel, model.bias, model.heldSvBlock.get)
+    assert(!expr.nullable && expr.eval(InternalRow(null)) === -0.3)
+  }
 }
